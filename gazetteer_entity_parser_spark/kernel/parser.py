@@ -144,11 +144,26 @@ class Parser:
         self.registry = registry
         self.threshold = f32(threshold)
         self.license_info = None
-        self._single_token_table = None
-        self._single_token_checked = False
-        self._le2_tables = None
-        self._le2_checked = False
-        self._rv_memo: dict[int, ResolvedValue] = {}
+        self._invalidate_run_caches()
+
+    # run-path caches are derived state: a pickle (broadcast, deepcopy)
+    # carries only the registry, threshold and license, and the copy rebuilds
+    # its caches on first run(); kept in, they would triple the pickle of a
+    # parser that has run.
+    _RUN_CACHES = (
+        "_single_token_table",
+        "_single_token_checked",
+        "_le2_tables",
+        "_le2_checked",
+        "_rv_memo",
+    )
+
+    def __getstate__(self) -> dict:
+        return {k: v for k, v in self.__dict__.items() if k not in self._RUN_CACHES}
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._invalidate_run_caches()
 
     def _resolved_value(self, entity_id: int) -> ResolvedValue:
         """Memoized entity materialization (strings per id never change;
@@ -169,7 +184,7 @@ class Parser:
         self._single_token_checked = False
         self._le2_tables = None
         self._le2_checked = False
-        self._rv_memo.clear()
+        self._rv_memo: dict[int, ResolvedValue] = {}
 
     def set_threshold(self, threshold: float) -> None:
         """reference: src/parser.rs:119-121 (stored as f32)."""

@@ -3,9 +3,9 @@
 Pure-Python re-expression of the reference registry
 (reference: src/parser_registry.rs:10-315 and src/symbol_table.rs:9-76).
 This object is what gets *broadcast* to every Spark executor; it is built
-either directly from a list of (raw_value, resolved_value) pairs (driver
-side) or from the output of the distributed DataFrame build job
-(see ..sources.builder_job).
+on the driver by the same sequential scan whether the rows come from a list
+of (raw_value, resolved_value) pairs or from one Arrow collect of a gazetteer
+DataFrame (see ..sources.builder_job).
 
 Data layout (all plain picklable containers):
 
@@ -59,6 +59,17 @@ class Registry:
         self.edge_cases: frozenset[int] = frozenset()
         self.injected: set[int] = set()
         self._id2tok: dict[int, str] | None = None  # lazy inverse, len-guarded
+
+    # the inverse token map is a lazy cache: pickles (broadcast, deepcopy)
+    # leave it out, so a registry pickles to the same bytes before and
+    # after the parser holding it has run
+    def __getstate__(self) -> dict:
+        return {k: getattr(self, k) for k in self.__slots__ if k != "_id2tok"}
+
+    def __setstate__(self, state: dict) -> None:
+        for k, v in state.items():
+            setattr(self, k, v)
+        self._id2tok = None
 
     def _id_to_token(self) -> dict[int, str]:
         """Inverse token map, cached; tokens are append-only so a length
@@ -297,6 +308,8 @@ class Registry:
             and self.entity_rank == other.entity_rank
             and self.entity_tokens == other.entity_tokens
             and self.resolved == other.resolved
+            and self.n_stop_words == other.n_stop_words
+            and self.additional_stop_words == other.additional_stop_words
             and self.stop_words == other.stop_words
             and self.edge_cases == other.edge_cases
             and self.injected == other.injected

@@ -1,13 +1,22 @@
 """Distributed parser build: gazetteer DataFrame -> Registry -> broadcast.
 
-Re-expresses the reference's offline build (reference:
-src/parser_builder.rs:82-101 + src/parser_registry.rs:38-65, 118-167) as
-DataFrame jobs, per SURVEY.md §2.1:
+The reference's offline build (reference: src/parser_builder.rs:82-101 +
+src/parser_registry.rs:38-167) produces a dimension-scale index that is
+assembled on the driver and broadcast whole. ``build_registry_distributed``
+therefore runs one Spark job: a single ``toArrow()`` collect of the
+gazetteer's three columns, ordered on the driver, feeding the kernel's
+sequential build (token interning, inverted index, stop words, edge cases).
+That is the same build ``ParserBuilder`` uses, so the broadcast parser is the
+reference-faithful one by construction.
+
+The same steps are also expressed as DataFrames (``build_index_frames``,
+``stop_words_df``, ``edge_cases_df``). They are catalog relations with DuckDB
+oracles (see plans/queries.py), not inputs of the build; tests pin them to
+the built ``Registry``:
 
 - rank assignment: explicit ``rank`` column (DataFrames have no row order);
 - tokenization: Arrow-batched pandas UDF around the kernel tokenizer (exact
-  parity incl. unicode-whitespace semantics — cheaper and more faithful than
-  approximating with ``F.split``);
+  parity incl. unicode-whitespace semantics);
 - token interning: first-appearance order over (rank, position) — matches
   the reference's BTreeMap+counter interning scan order
   (reference: src/symbol_table.rs:17-27);
@@ -17,19 +26,16 @@ DataFrame jobs, per SURVEY.md §2.1:
 - edge cases: entities whose token set ⊆ stop words
   (reference: src/parser_registry.rs:159-166).
 
-The assembled ``Registry`` is verified equal to the kernel's driver-side
-build in tests, then shipped to executors with ``SparkContext.broadcast``.
-
 Scale note: the gazetteer is dimension-scale (≤ tens of millions of rows ≪
-the 10^12-doc corpus). The two groupBys shuffle only gazetteer tokens; id
-assignment uses a single-partition window over *distinct tokens / entities*
-only, which is the standard dimension-build trade-off. The corpus-side scan
-never shuffles on gazetteer keys — the index travels as a broadcast.
+the 10^12-doc corpus), and a gazetteer that does not fit the driver does not
+fit the executors' broadcast either. The corpus-side scan never shuffles on
+gazetteer keys — the index travels as a broadcast.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,14 +51,6 @@ GAZETTEER_SCHEMA = "raw_value string, resolved_value string, rank bigint"
 def tokenize_udf(raw: pd.Series) -> pd.Series:
     """Kernel-exact tokenization, Arrow-batched (no per-row Python UDF)."""
     return raw.map(lambda s: tokens_only(s) if s is not None else [])
-
-
-def with_rank_from_order(df: DataFrame, order_col: str = "popularity") -> DataFrame:
-    """Materialize the reference's implicit list-position rank
-    (reference: src/parser_builder.rs:90-92) from an explicit ordering
-    column. Single-partition window — dimension-scale only."""
-    w = Window.orderBy(F.col(order_col).asc())
-    return df.withColumn("rank", F.row_number().over(w) - F.lit(1))
 
 
 def build_index_frames(gazetteer_df: DataFrame) -> dict[str, DataFrame]:
@@ -136,98 +134,42 @@ def edge_cases_df(frames: dict[str, DataFrame], stop_words: DataFrame) -> DataFr
     )
 
 
-# below this, one collect + the sequential kernel build beats ~6 Spark jobs
-# of window/UDF overhead; above it, the DataFrame build amortizes
-SMALL_GAZETTEER_ROWS = 100_000
-
-
 def build_registry_distributed(
     gazetteer_df: DataFrame,
     n_stop_words: int = 0,
     additional_stop_words: list[str] | None = None,
-    small_gazetteer_rows: int = SMALL_GAZETTEER_ROWS,
+    small_gazetteer_rows: int = 0,
 ) -> Registry:
-    """Run the DataFrame build and assemble the (small) Registry on the
-    driver. Must be bit-identical to the kernel's sequential build — pinned
-    by tests/test_builder_job.py.
+    """Build the ``Registry`` from one Arrow collect of the gazetteer.
 
-    Dimension-scale fast path: a gazetteer under ``small_gazetteer_rows`` is
-    collected once and indexed by the sequential kernel build (the exact
-    plan the reference uses, src/parser_builder.rs:90-105) — spending six
-    Spark jobs of window/UDF fixed overhead to index a broadcast-sized
-    dimension is the wrong physical plan. The DataFrame build below remains
-    the path for 10^5+-row gazetteers; equality of the two is pinned in
-    tests (pass ``small_gazetteer_rows=0`` to force the DataFrame path)."""
-    if small_gazetteer_rows > 0:
-        probe = (
-            gazetteer_df.select("raw_value", "resolved_value", "rank")
-            .limit(small_gazetteer_rows + 1)
-            .collect()
-        )
-        if len(probe) <= small_gazetteer_rows:
-            # mirror the DataFrame path exactly: NULL/whitespace-only
-            # raw_value rows tokenize to [] and are filtered there
-            # (F.size(tokens) > 0) — without this the probe path crashed on
-            # inputs the big path silently accepts
-            probe = [r for r in probe if r["raw_value"] and tokens_only(r["raw_value"])]
-            # same total order as build_index_frames' entity-id window
-            # (Spark asc = NULLS FIRST, hence null-safe keys for BOTH
-            # nullable columns — a NULL rank must sort first, not raise)
-            probe.sort(
-                key=lambda r: (
-                    (r["rank"] is not None, r["rank"] if r["rank"] is not None else 0),
-                    (r["resolved_value"] is not None, r["resolved_value"] or ""),
-                    r["raw_value"],
-                )
-            )
-            reg = Registry()
-            for r in probe:
-                reg.add_raw_value(r["raw_value"], r["resolved_value"], r["rank"])
-            reg.set_stop_words(n_stop_words, additional_stop_words)
-            return reg
+    Rows are ordered by ``(rank, resolved_value, raw_value)`` ascending,
+    NULLs first — the same total order as ``build_index_frames``' entity-id
+    window, so duplicate user-supplied ranks still give deterministic
+    entity ids — and fed to the kernel's sequential build
+    (reference: src/parser_builder.rs:90-105). Rows whose raw value is NULL
+    or yields no token are skipped (src/parser_registry.rs:39-41).
 
-    frames = build_index_frames(gazetteer_df)
-
-    # r6: persist the entities frame — BOTH driver reads below (and the
-    # token-interning branch) otherwise re-execute the tokenize-UDF +
-    # global-rank-window lineage from scratch (measured: the 150k-row bench
-    # build ran it 4x); one materialization feeds every consumer, and the
-    # boundary is dropped before returning
-    entities = frames["entities"].persist()
-    try:
-        # Arrow transfer instead of row-by-row collect(): the two reads move
-        # ~300k rows of strings/arrays to the driver, where the pickled-row
-        # path was ~2x the remaining build cost
-        ent_tbl = (
-            entities.orderBy("entity_id")
-            .select("resolved_value", "rank", "tokens")
-            .toArrow()
-        )
-        tok_tbl = frames["tokens"].orderBy("token_id").select("token").toArrow()
-
-        reg = Registry()
-        # token ids first-appearance order == kernel interning order; rebuild
-        # the exact same structures without re-scanning strings
-        tokens = tok_tbl.column("token").to_pylist()
-        reg.token_ids = {t: i for i, t in enumerate(tokens)}
-        reg.postings = [[] for _ in tokens]
-        token_ids = reg.token_ids
-        for resolved_value, rank, toks in zip(
-            ent_tbl.column("resolved_value").to_pylist(),
-            ent_tbl.column("rank").to_pylist(),
-            ent_tbl.column("tokens").to_pylist(),
-        ):
-            ev = len(reg.resolved)
-            reg.resolved.append(resolved_value)
-            reg.entity_rank.append(rank)
-            tok_ids = tuple(token_ids[t] for t in toks)
-            reg.entity_tokens.append(tok_ids)
-            for tid in tok_ids:
-                plist = reg.postings[tid]
-                if not plist or plist[-1] != ev:
-                    plist.append(ev)
-    finally:
-        entities.unpersist()
+    ``small_gazetteer_rows`` has no effect; it is accepted only because
+    ``bench.py`` still passes ``small_gazetteer_rows=0``."""
+    tbl = gazetteer_df.select("raw_value", "resolved_value", "rank").toArrow()
+    order = pc.sort_indices(
+        tbl,
+        sort_keys=[
+            ("rank", "ascending"),
+            ("resolved_value", "ascending"),
+            ("raw_value", "ascending"),
+        ],
+        null_placement="at_start",
+    )
+    tbl = tbl.take(order)
+    reg = Registry()
+    for raw_value, resolved_value, rank in zip(
+        tbl.column("raw_value").to_pylist(),
+        tbl.column("resolved_value").to_pylist(),
+        tbl.column("rank").to_pylist(),
+    ):
+        if raw_value is not None:
+            reg.add_raw_value(raw_value, resolved_value, rank)
     reg.set_stop_words(n_stop_words, additional_stop_words)
     return reg
 
@@ -272,15 +214,3 @@ def prepend_and_rebroadcast(
     old_broadcast.unpersist()
     return spark.sparkContext.broadcast(parser)
 
-
-def inject_and_rebroadcast(
-    spark: SparkSession,
-    old_broadcast,
-    new_values: list[tuple[str, str]],
-    prepend: bool,
-    from_vanilla: bool,
-):
-    """Injection as broadcast-rebuild (reference: src/parser.rs:156-168)."""
-    new_parser = old_broadcast.value.inject_new_values(new_values, prepend, from_vanilla)
-    old_broadcast.unpersist()
-    return spark.sparkContext.broadcast(new_parser)

@@ -2,6 +2,7 @@
 general matching path, and must correctly refuse to engage when any
 precondition fails (multi-token entries, stop words)."""
 
+import pickle
 import random
 
 from gazetteer_entity_parser_spark.kernel import Parser, ParserBuilder
@@ -117,6 +118,22 @@ def test_le2_refuses_low_threshold_and_long_entries():
     assert p1._le2_lookup() is None  # 1-of-2 partials survive at θ=0.5
     p2 = ParserBuilder().set_gazetteer([("a b c", "ABC")]).minimum_tokens_ratio(0.8).build()
     assert p2._le2_lookup() is None
+
+
+def test_pickle_leaves_out_run_caches():
+    """A parser that has run pickles (broadcast, deepcopy) to the same bytes
+    as before its first run, and the copy rebuilds its tables and answers
+    the same."""
+    gaz = [("a b", "AB"), ("c", "C"), ("b c", "BC"), ("d", "D")]
+    parser = ParserBuilder().set_gazetteer(gaz).minimum_tokens_ratio(0.6).build()
+    before = pickle.dumps(parser)
+    expected = parser.run("a b c d a b", 3)
+    assert parser._le2_tables is not None
+    assert pickle.dumps(parser) == before
+    clone = pickle.loads(before)
+    assert clone._le2_tables is None and not clone._le2_checked
+    assert clone.run("a b c d a b", 3) == expected
+    assert clone._le2_tables is not None
 
 
 def test_le2_matches_general_randomized():
