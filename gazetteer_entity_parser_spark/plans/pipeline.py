@@ -168,10 +168,11 @@ def replay_buckets(
         max_alternatives=cfg.max_alternatives,
         window_tokens=cfg.window_tokens,
     ).withColumn("bucket", _bucket("url", cfg.n_buckets))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    mentions.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(workdir, "mentions")
-    )
+    # dynamic overwrite for this write only: a session-wide setting would make
+    # every later overwrite (the next run's Stage B) keep stale partitions
+    mentions.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(os.path.join(workdir, "mentions"))
 
 
 def docs_from_sf_dir(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -64,10 +64,14 @@ def committed_tokens(target_path: str) -> set[str]:
 #
 # The store is hash-partitioned by pmod(xxhash64(subj), N) so a merge rewrites
 # ONLY the partitions its updates touch; untouched partitions are HARD-LINKED
-# from the previous version (no data copy, byte-identical files). Publishing
-# is a single os.rename of a symlink — one atomic step, no window where the
-# target is absent (ADVICE r2: the old two-rename swap could strand the store
-# mid-crash). On a real cluster Iceberg MERGE INTO supersedes all of this.
+# from the previous version (no data copy, byte-identical files). Every write
+# is clustered on bucket first, so each bucket=K dir it produces holds exactly
+# ONE parquet file: the sink's cost scales with files opened, not bytes, and
+# the layout stays one file per bucket however the updates were partitioned.
+# Publishing is a single os.rename of a symlink — one atomic step, no window
+# where the target is absent (ADVICE r2: the old two-rename swap could strand
+# the store mid-crash). On a real cluster Iceberg MERGE INTO supersedes all of
+# this.
 
 _VERSION_RE = ".v-"
 
@@ -153,6 +157,13 @@ def merge_into_parquet(
     O(B/N of the table), not O(table). ``n_buckets`` is fixed at store
     creation (an ``_nbuckets_<N>`` marker wins over the parameter afterwards).
 
+    The write is clustered by bucket (one hash exchange on ``bucket``, below
+    the merge's aggregate when there is one), so every touched ``bucket=K``
+    dir gets exactly one parquet file. Unclustered, every write task would
+    open a writer per bucket it holds (an 8-partition input: 8 files per
+    bucket), and at store sizes like these the per-file cost, not the
+    bytes, sets the sink's time.
+
     Publishing is ONE atomic ``os.rename`` of a symlink onto the target
     (see the layout note above) — the target is never absent, a torn merge
     leaves the previous version current, and :func:`_recover_symlink` repoints
@@ -177,56 +188,54 @@ def merge_into_parquet(
             n_buckets = stored_n  # marker wins: bucketing is fixed at creation
     # persist: the updates lineage (often a whole extraction pipeline in
     # foreachBatch) is referenced by BOTH the touched-buckets collect and the
-    # merged write — without the boundary it would execute end-to-end twice
+    # merged write — without the boundary it would execute end-to-end twice.
+    # Released in ``finally``: a failed collect or write must not leave the
+    # cached frame behind for the rest of the session.
     upd = updates.withColumn(
         "bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
     ).persist()
-    touched = sorted(
-        r["bucket"] for r in upd.select("bucket").distinct().collect()
-    )  # bounded by n_buckets rows
-    if not touched and current_version is None:
-        # empty batch onto a non-existent store: publishing would create a
-        # version dir with ZERO parquet files, which every later read fails
-        # to infer a schema from — the store would be permanently poisoned
-        # (and the commit token would mark the batch done). Nothing to merge
-        # and nothing worth recording: a replay of an empty batch is a no-op.
-        upd.unpersist()
-        return True
+    try:
+        touched = sorted(
+            r["bucket"] for r in upd.select("bucket").distinct().collect()
+        )  # bounded by n_buckets rows
+        if not touched and current_version is None:
+            # empty batch onto a non-existent store: publishing would create a
+            # version dir with ZERO parquet files, which every later read fails
+            # to infer a schema from — the store would be permanently poisoned
+            # (and the commit token would mark the batch done). Nothing to merge
+            # and nothing worth recording: a replay of an empty batch is a no-op.
+            return True
 
-    if current_version is not None and not legacy_dir:
-        current = spark.read.parquet(current_version)
-        merged = (
+        if current_version is None:
+            current = None
+        elif not legacy_dir:
             # partition pruning: only the touched buckets' files are read
             # (an empty batch touches nothing: every partition hard-links)
-            current.where(F.col("bucket").isin(touched) if touched else F.lit(False))
-            .unionByName(upd)
-            .groupBy("subj", "pred", "obj", "bucket")
-            .agg(
+            current = spark.read.parquet(current_version).where(
+                F.col("bucket").isin(touched) if touched else F.lit(False)
+            )
+        else:  # pre-versioning store: one full rewrite migrates it
+            current = spark.read.parquet(current_version).withColumn(
+                "bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
+            )
+            touched = list(range(n_buckets))
+        # one file per touched bucket (see the layout note). No explicit
+        # partition count, so AQE still coalesces the write to few tasks; below
+        # the aggregate, HashPartitioning(bucket) satisfies its clustering, so
+        # a merge keeps its single exchange.
+        rows = upd if current is None else current.unionByName(upd)
+        merged = rows.repartition("bucket")
+        if current is not None:
+            merged = merged.groupBy("subj", "pred", "obj", "bucket").agg(
                 F.sum("weight").alias("weight"),
                 F.min("subj_rank").alias("subj_rank"),
                 F.min("obj_rank").alias("obj_rank"),
             )
-        )
-    elif legacy_dir:  # pre-versioning store: one full rewrite migrates it
-        current = spark.read.parquet(current_version).withColumn(
-            "bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
-        )
-        merged = (
-            current.unionByName(upd)
-            .groupBy("subj", "pred", "obj", "bucket")
-            .agg(
-                F.sum("weight").alias("weight"),
-                F.min("subj_rank").alias("subj_rank"),
-                F.min("obj_rank").alias("obj_rank"),
-            )
-        )
-        touched = list(range(n_buckets))
-    else:
-        merged = upd
 
-    new_version = _next_version_path(target_path)
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(new_version)
-    upd.unpersist()
+        new_version = _next_version_path(target_path)
+        merged.write.mode("overwrite").partitionBy("bucket").parquet(new_version)
+    finally:
+        upd.unpersist()
 
     # hard-link untouched partitions from the current version (same inode ->
     # byte-identical, no data copy)

@@ -105,7 +105,12 @@ def test_checkpoint_replay_idempotent(spark, result):
     shutil.rmtree(f"{res['mentions_path']}/bucket=3")
     assert spark.read.parquet(res["mentions_path"]).count() < len(mentions_before)
 
+    # the replay's dynamic overwrite is scoped to its own write: it must not
+    # leak into the session and turn later overwrites dynamic
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
     replay_buckets(spark, docs, workdir, [3], CFG, parser=res["parser"])
+    assert spark.conf.get(mode_key) == mode_before
     mentions_after = sorted(
         map(tuple, spark.read.parquet(res["mentions_path"]).drop("alternatives").collect())
     )

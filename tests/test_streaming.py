@@ -555,3 +555,105 @@ def test_merge_retains_one_superseded_generation(spark, tmp_path):
     dirs = {os.path.abspath(d) for d in _version_dirs(target)}
     assert dirs == {v2, v3}  # v1 pruned by the following merge, v2 retained
     assert spark.read.parquet(target).collect()[0]["weight"] == 3
+
+
+_TRIPLES_SCHEMA = (
+    "subj string, pred string, obj string, weight bigint, "
+    "subj_rank bigint, obj_rank bigint"
+)
+
+
+def _spread_triples(spark, n, weight=1, partitions=8):
+    """``n`` distinct triples spread round-robin over ``partitions``, so every
+    input partition holds rows of most buckets."""
+    rows = [(f"E{i}", "p", f"F{i}", weight, 0, 1) for i in range(n)]
+    return spark.createDataFrame(rows, _TRIPLES_SCHEMA).repartition(partitions)
+
+
+def _part_files_per_bucket(store: str) -> dict:
+    """{bucket_dir: number of part-*.parquet files} of the CURRENT version."""
+    import os
+
+    real = os.path.realpath(store)
+    return {
+        entry: sum(
+            f.startswith("part-") and f.endswith(".parquet")
+            for f in os.listdir(os.path.join(real, entry))
+        )
+        for entry in os.listdir(real)
+        if entry.startswith("bucket=")
+    }
+
+
+def _merge_without_coalescing(spark, *args, **kwargs):
+    """Merge with AQE's partition coalescing off, so a one-file-per-bucket
+    layout holds by construction, not because AQE chose one write task."""
+    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        return merge_into_parquet(spark, *args, **kwargs)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_fresh_store_writes_one_file_per_bucket(spark, tmp_path):
+    """A fresh store built from an 8-partition input: each bucket dir holds
+    one parquet file, not one per input partition."""
+    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+
+    target = str(tmp_path / "store")
+    assert merge_into_parquet(spark, target, _spread_triples(spark, 256), n_buckets=8)
+    assert _part_files_per_bucket(target) == {f"bucket={b}": 1 for b in range(8)}
+    assert spark.read.parquet(target).count() == 256
+
+
+def test_merge_into_existing_store_writes_one_file_per_bucket(spark, tmp_path):
+    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+
+    target = str(tmp_path / "store")
+    assert merge_into_parquet(spark, target, _spread_triples(spark, 256), n_buckets=8)
+    assert _merge_without_coalescing(spark, target, _spread_triples(spark, 64, weight=2))
+    assert _part_files_per_bucket(target) == {f"bucket={b}": 1 for b in range(8)}
+    weights = {r["subj"]: r["weight"] for r in spark.read.parquet(target).collect()}
+    assert len(weights) == 256
+    assert weights["E0"] == 3 and weights["E63"] == 3 and weights["E64"] == 1
+
+
+def test_legacy_migration_writes_one_file_per_bucket(spark, tmp_path):
+    target = str(tmp_path / "store")
+    _spread_triples(spark, 256).write.parquet(target)  # legacy: plain dir
+    assert _merge_without_coalescing(
+        spark, target, _spread_triples(spark, 64, weight=2), n_buckets=8
+    )
+    assert _part_files_per_bucket(target) == {f"bucket={b}": 1 for b in range(8)}
+    weights = {r["subj"]: r["weight"] for r in spark.read.parquet(target).collect()}
+    assert len(weights) == 256 and weights["E0"] == 3 and weights["E64"] == 1
+
+
+def test_failed_merge_releases_persisted_frame(spark, tmp_path, monkeypatch):
+    """A merge whose write fails raises, keeps the current version, and does
+    not leave its persisted updates frame cached in the session."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    from gazetteer_entity_parser_spark.sources import sinks
+
+    target = str(tmp_path / "store")
+    assert sinks.merge_into_parquet(
+        spark, target, _spread_triples(spark, 16), commit_token="0", n_buckets=4
+    )
+    version = os.path.realpath(target)
+    blocker = tmp_path / "blocker"  # a regular file: no dir can be made under it
+    blocker.write_text("")
+    monkeypatch.setattr(sinks, "_next_version_path", lambda _t: str(blocker / "v"))
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Py4JJavaError):
+        sinks.merge_into_parquet(spark, target, _spread_triples(spark, 16), commit_token="1")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert os.path.realpath(target) == version
+    assert sinks.committed_tokens(target) == {"0"}
